@@ -26,12 +26,6 @@ object Report {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  def bucket(name: String, color: String, df: DataFrame, limit: Int = 20): Unit = {
-    val n = df.count()
-    println(s"$color== $name: $n rows (showing up to $limit)$Reset")
-    df.limit(limit).collect().foreach(r => println(s"$color  $r$Reset"))
-  }
-
   private def bucketPrecounted(name: String, color: String, df: DataFrame,
       n: Long, limit: Int): Unit = {
     println(s"$color== $name: $n rows (showing up to $limit)$Reset")

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types._
   * sidesteps this with canonical JSON (`json-stable-stringify`,
   * `/root/reference/src/index.js:14,89-91`); here maps are rewritten —
   * recursively, through structs and arrays — into key-sorted entry arrays,
-  * which ARE orderable/comparable. Pure Catalyst expressions, stays in
-  * codegen.
+  * which ARE orderable/comparable. Pure Catalyst expressions, but not all
+  * in codegen: `transform` and `array_sort` (`ArrayTransform`, `ArraySort`)
+  * are `CodegenFallback` in Spark 4.1, so those steps run interpreted.
   */
 object Canon {
 

@@ -1,7 +1,5 @@
 package graft.sources.avro
 
-import java.io.{ObjectInputStream, ObjectOutputStream}
-
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
@@ -16,6 +14,7 @@ import org.apache.hadoop.mapreduce.TaskAttemptContext
 import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriter, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** Spark-native Avro Object Container File source (read path).
   *
@@ -97,7 +96,7 @@ class AvroFileFormat extends FileFormat with DataSourceRegister with Serializabl
       options: Map[String, String],
       hadoopConf: Configuration): PartitionedFile => Iterator[InternalRow] = {
     val confBroadcast =
-      sparkSession.sparkContext.broadcast(new SerializableConf(hadoopConf))
+      sparkSession.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
     val overrideSchemaJson = options.get(AvroFileFormat.SchemaOption)
     val requiredNames = requiredSchema.fieldNames.toSeq
 
@@ -115,7 +114,9 @@ class AvroFileFormat extends FileFormat with DataSourceRegister with Serializabl
       // Reader-schema projection: decode only what Catalyst asked for.
       val readerSchema = AvroSchemaConverter.prune(baseSchema, requiredNames)
       datumReader.setExpected(readerSchema)
-      val convert = AvroDeserializer.rowConverter(readerSchema, requiredSchema)
+      // A column the file cannot supply as the table's type fails here,
+      // before any row is read; Spark's FAILED_READ_FILE names the file.
+      val convert = AvroSchemaConverter.rowDecoder(readerSchema, requiredSchema)
 
       // Split handling via sync markers: start at the first sync ≥ start,
       // stop once past the split end — each block is read exactly once
@@ -138,22 +139,6 @@ object AvroFileFormat {
   val SchemaOption = "avroSchema"
 }
 
-/** Hadoop Configuration is not java-serializable; minimal wrapper so the
-  * read closure can ship to executors.
-  */
-private class SerializableConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
 /** One Avro container file per task: Catalyst rows serialized through
   * [[AvroSerializer]] into a `DataFileWriter` with the requested codec.
   */
@@ -163,8 +148,7 @@ private class AvroOutputWriter(
     dataSchema: org.apache.spark.sql.types.StructType,
     codec: String) extends OutputWriter {
 
-  private val avroSchema = AvroSerializer.toAvroSchema(dataSchema)
-  private val convert = AvroSerializer.rowConverter(dataSchema, avroSchema)
+  private val (avroSchema, convert) = AvroSerializer.recordEncoder(dataSchema)
 
   private val writer = {
     val w = new org.apache.avro.file.DataFileWriter[GenericRecord](

@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.Schema
+import org.apache.avro.{Conversions, LogicalType, LogicalTypes, Schema}
 import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
@@ -12,97 +12,85 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalyst schema/rows → Avro schema/records, the write-side mirror of
-  * [[AvroSchemaConverter]]/[[AvroDeserializer]]. Nullable columns become
-  * `["null", T]` unions; structs/arrays/maps recurse; converters are
-  * built once per writer, not per row.
+  * [[AvroSchemaConverter]]. Nullable columns become `["null", T]` unions;
+  * structs/arrays/maps recurse; encoders are built once per writer, not
+  * per row.
   */
 object AvroSerializer {
 
-  /** StructType → Avro record schema. Nested record names derive from the
-    * field path so they stay unique within the file schema.
+  private type Encoder = Any => Any
+
+  /** StructType → Avro record schema and the encoder of rows into records
+    * of that schema. Nested record names derive from the field path so they
+    * stay unique within the file schema.
     */
-  def toAvroSchema(st: StructType, name: String = "topLevelRecord",
-      namespace: String = "graft"): Schema = {
-    val rec = Schema.createRecord(name, null, namespace, false)
-    val fields = st.fields.map { f =>
-      new Schema.Field(f.name, fieldSchema(f.dataType, f.nullable, s"${name}_${f.name}"),
-        null, null)
-    }
-    rec.setFields(fields.toSeq.asJava)
-    rec
+  def recordEncoder(st: StructType, name: String = "topLevelRecord",
+      namespace: String = "graft"): (Schema, InternalRow => GenericRecord) = {
+    val (schemas, encoders) =
+      st.fields.map(f => field(f.dataType, f.nullable, s"${name}_${f.name}")).unzip
+    val types = st.fields.map(_.dataType)
+    val schema = Schema.createRecord(name, null, namespace, false)
+    schema.setFields(st.fields.zip(schemas).map { case (f, s) =>
+      new Schema.Field(f.name, s, null, null)
+    }.toSeq.asJava)
+    (schema, row => {
+      val rec = new GenericData.Record(schema)
+      var i = 0
+      while (i < encoders.length) {
+        rec.put(i, if (row.isNullAt(i)) null else encoders(i)(row.get(i, types(i))))
+        i += 1
+      }
+      rec
+    })
   }
 
-  private def fieldSchema(dt: DataType, nullable: Boolean, path: String): Schema = {
-    val base = dt match {
-      case BooleanType => Schema.create(Schema.Type.BOOLEAN)
-      case IntegerType | ShortType | ByteType => Schema.create(Schema.Type.INT)
-      case LongType => Schema.create(Schema.Type.LONG)
-      case FloatType => Schema.create(Schema.Type.FLOAT)
-      case DoubleType => Schema.create(Schema.Type.DOUBLE)
-      case StringType => Schema.create(Schema.Type.STRING)
-      case BinaryType => Schema.create(Schema.Type.BYTES)
-      case DateType =>
-        org.apache.avro.LogicalTypes.date()
-          .addToSchema(Schema.create(Schema.Type.INT))
-      case TimestampType =>
-        org.apache.avro.LogicalTypes.timestampMicros()
-          .addToSchema(Schema.create(Schema.Type.LONG))
-      case TimestampNTZType =>
-        // session-independent wall-clock time: Avro's local-timestamp
-        // logical type (Avro 1.10+), micros since epoch-as-local
-        org.apache.avro.LogicalTypes.localTimestampMicros()
-          .addToSchema(Schema.create(Schema.Type.LONG))
+  /** Avro schema and encoder of one Catalyst value (as stored in
+    * InternalRow/ArrayData) of type `dt`.
+    */
+  private def field(dt: DataType, nullable: Boolean, path: String): (Schema, Encoder) = {
+    def primitive(t: Schema.Type, encode: Encoder = identity): (Schema, Encoder) =
+      (Schema.create(t), encode)
+    def logical(lt: LogicalType, t: Schema.Type): (Schema, Encoder) =
+      (lt.addToSchema(Schema.create(t)), identity)
+    val (base, encode) = dt match {
+      case BooleanType => primitive(Schema.Type.BOOLEAN)
+      case IntegerType => primitive(Schema.Type.INT)
+      case ShortType => primitive(Schema.Type.INT, v => v.asInstanceOf[Short].toInt)
+      case ByteType => primitive(Schema.Type.INT, v => v.asInstanceOf[Byte].toInt)
+      case LongType => primitive(Schema.Type.LONG)
+      case FloatType => primitive(Schema.Type.FLOAT)
+      case DoubleType => primitive(Schema.Type.DOUBLE)
+      case StringType => primitive(Schema.Type.STRING, v => v.asInstanceOf[UTF8String].toString)
+      case BinaryType =>
+        primitive(Schema.Type.BYTES, v => ByteBuffer.wrap(v.asInstanceOf[Array[Byte]]))
+      case DateType => logical(LogicalTypes.date(), Schema.Type.INT)
+      case TimestampType => logical(LogicalTypes.timestampMicros(), Schema.Type.LONG)
+      // session-independent wall-clock time: Avro's local-timestamp
+      // logical type (Avro 1.10+), micros since epoch-as-local
+      case TimestampNTZType => logical(LogicalTypes.localTimestampMicros(), Schema.Type.LONG)
       case d: DecimalType =>
-        org.apache.avro.LogicalTypes.decimal(d.precision, d.scale)
-          .addToSchema(Schema.create(Schema.Type.BYTES))
-      case s: StructType => toAvroSchema(s, path)
-      case ArrayType(et, containsNull) =>
-        Schema.createArray(fieldSchema(et, containsNull, s"${path}_item"))
-      case MapType(StringType, vt, valueContainsNull) =>
-        Schema.createMap(fieldSchema(vt, valueContainsNull, s"${path}_value"))
-      case other =>
-        throw new UnsupportedOperationException(s"avro write: unsupported type $other")
-    }
-    if (nullable) Schema.createUnion(Schema.create(Schema.Type.NULL), base) else base
-  }
-
-  /** Converter for one Catalyst value (as stored in InternalRow/ArrayData)
-    * into the Avro runtime value for `schema`.
-    */
-  private def valueConverter(dt: DataType, schema: Schema): Any => Any = {
-    val target = if (schema.getType == Schema.Type.UNION)
-      schema.getTypes.asScala.find(_.getType != Schema.Type.NULL).get
-    else schema
-    dt match {
-      case BooleanType | IntegerType | LongType | FloatType | DoubleType |
-           DateType | TimestampType | TimestampNTZType => identity
-      case ShortType => v => v.asInstanceOf[Short].toInt
-      case ByteType => v => v.asInstanceOf[Byte].toInt
-      case StringType => v => v.asInstanceOf[UTF8String].toString
-      case BinaryType => v => ByteBuffer.wrap(v.asInstanceOf[Array[Byte]])
-      case _: DecimalType =>
-        val conv = new org.apache.avro.Conversions.DecimalConversion
-        v => conv.toBytes(
-          v.asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal,
-          target, target.getLogicalType)
+        val lt = LogicalTypes.decimal(d.precision, d.scale)
+        val s = lt.addToSchema(Schema.create(Schema.Type.BYTES))
+        val conv = new Conversions.DecimalConversion
+        (s, (v: Any) => conv.toBytes(v.asInstanceOf[Decimal].toJavaBigDecimal, s, lt))
       case st: StructType =>
-        val conv = rowConverter(st, target)
-        v => conv(v.asInstanceOf[InternalRow])
-      case ArrayType(et, _) =>
-        val elem = valueConverter(et, target.getElementType)
-        v => {
+        val (s, encodeRow) = recordEncoder(st, path)
+        (s, (v: Any) => encodeRow(v.asInstanceOf[InternalRow]))
+      case ArrayType(et, containsNull) =>
+        val (elem, encodeElem) = field(et, containsNull, s"${path}_item")
+        (Schema.createArray(elem), (v: Any) => {
           val arr = v.asInstanceOf[ArrayData]
           val out = new java.util.ArrayList[Any](arr.numElements())
           var i = 0
           while (i < arr.numElements()) {
-            out.add(if (arr.isNullAt(i)) null else elem(arr.get(i, et)))
+            out.add(if (arr.isNullAt(i)) null else encodeElem(arr.get(i, et)))
             i += 1
           }
           out
-        }
-      case MapType(StringType, vt, _) =>
-        val value = valueConverter(vt, target.getValueType)
-        v => {
+        })
+      case MapType(StringType, vt, valueContainsNull) =>
+        val (value, encodeValue) = field(vt, valueContainsNull, s"${path}_value")
+        (Schema.createMap(value), (v: Any) => {
           val m = v.asInstanceOf[MapData]
           val keys = m.keyArray()
           val vals = m.valueArray()
@@ -110,27 +98,14 @@ object AvroSerializer {
           var i = 0
           while (i < m.numElements()) {
             out.put(keys.getUTF8String(i).toString,
-              if (vals.isNullAt(i)) null else value(vals.get(i, vt)))
+              if (vals.isNullAt(i)) null else encodeValue(vals.get(i, vt)))
             i += 1
           }
           out
-        }
+        })
       case other =>
         throw new UnsupportedOperationException(s"avro write: unsupported type $other")
     }
-  }
-
-  /** InternalRow → GenericRecord for a record schema. */
-  def rowConverter(st: StructType, schema: Schema): InternalRow => GenericRecord = {
-    val fields = st.fields.zipWithIndex.map { case (f, i) =>
-      (i, f.dataType, valueConverter(f.dataType, schema.getFields.get(i).schema()))
-    }
-    row => {
-      val rec = new GenericData.Record(schema)
-      fields.foreach { case (i, dt, conv) =>
-        rec.put(i, if (row.isNullAt(i)) null else conv(row.get(i, dt)))
-      }
-      rec
-    }
+    (if (nullable) Schema.createUnion(Schema.create(Schema.Type.NULL), base) else base, encode)
   }
 }

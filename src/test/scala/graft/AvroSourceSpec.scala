@@ -1,19 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.io.File
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.avro.Schema
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.DiffConfig
 import graft.ops.{KeyDiff, VennDiff}
 
-/** Drives the custom Avro FileFormat against the reference's own fixtures
-  * (read-only at /root/reference/avro — snappy-coded except userdata4,
-  * FIXTURES.md).
+/** Drives the custom Avro FileFormat against container files written by
+  * [[AvroFixtures]] in the reference fixtures' shapes (FIXTURES.md F1–F4,
+  * snappy-coded except userdata4).
   */
 class AvroSourceSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/avro"
+  private lazy val fixtures: String = {
+    val dir = Files.createTempDirectory("avro-fixtures").toFile
+    AvroFixtures.writeAll(dir)
+    FileUtils.forceDeleteOnExit(dir)
+    dir.getPath
+  }
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -38,8 +51,8 @@ class AvroSourceSpec extends AnyFunSuite {
   }
 
   test("reads null-codec userdata4 (codec auto-detect, no config flag)") {
-    // README.txt claims 1000 rows, but the container block headers sum to
-    // 1003 (verified independently) — trust the bytes, not the docs.
+    // Written in many blocks whose counts sum to 1003 (the reference's
+    // README.txt claims 1000 rows for its userdata4) — trust the bytes.
     assert(avro(s"$fixtures/sample_avro/userdata4.avro").count() == 1003)
   }
 
@@ -78,9 +91,7 @@ class AvroSourceSpec extends AnyFunSuite {
   }
 
   test("map-of-record fixture: students venn + keyDiff via canonicalization") {
-    // guid_2/students.avro (and guid_1/assetStudents.avro) are corrupted in
-    // the reference repo — a text-encoding round-trip replaced non-UTF8
-    // bytes with U+FFFD. Perturb the intact guid_1 file instead.
+    // The new side is the old one with one scalar perturbed.
     val old = avro(s"$fixtures/fake_account_tc_guid_1/students.avro")
     assert(old.schema("weeklyMessageAggregates").dataType.typeName == "map")
     // self-venn: everything intersects, nothing added/removed
@@ -101,7 +112,7 @@ class AvroSourceSpec extends AnyFunSuite {
     // self-diff all unchanged even with map columns
     val selfD = KeyDiff.diff(old, old, Seq("globalStudentId"))
     assert(selfD.filter(col(KeyDiff.StatusCol) =!= "unchanged").isEmpty)
-    // 3-level nested arrays-of-records fixture reads too (guid_2 copy intact)
+    // 3-level nested arrays-of-records fixture (F4) reads too
     assert(avro(s"$fixtures/fake_account_tc_guid_2/assetStudents.avro").count() == 235)
   }
 
@@ -298,5 +309,115 @@ class AvroSourceSpec extends AnyFunSuite {
         .orderBy("h").collect().map(_.getString(0)).toSeq
     assert(digest(back) == digest(src))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
+  test("fixture generator writes byte-identical files") {
+    val again = Files.createTempDirectory("avro-fixtures-again").toFile
+    try {
+      AvroFixtures.writeAll(again)
+      val root = new File(fixtures).toPath
+      val files = FileUtils.listFiles(root.toFile, null, true).asScala.toSeq
+      assert(files.size == 7)
+      files.foreach { f =>
+        val twin = new File(again, root.relativize(f.toPath).toString)
+        assert(FileUtils.contentEquals(f, twin), s"$f differs between generations")
+      }
+    } finally FileUtils.deleteQuietly(again)
+  }
+
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Rows of `df`, and the number of partitions each input file's rows came from. */
+  private def readWithSpans(df: org.apache.spark.sql.DataFrame): (Seq[Row], Map[String, Long]) = {
+    val spans = df.select(col("_metadata.file_name").as("f"), spark_partition_id().as("p"))
+      .distinct().groupBy("f").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    (df.collect().toSeq, spans)
+  }
+
+  test("multi-split reads: each file spans many splits and rows equal a single-split read") {
+    val rows = (1 to 2000).map(AvroFixtures.userRow(_))
+    for (codec <- Seq("null", "deflate", "snappy", "zstandard")) {
+      val dir = Files.createTempDirectory(s"avro-split-$codec").toFile
+      try {
+        // 1 KB blocks: each file holds over a hundred sync markers
+        for (k <- 0 to 1)
+          AvroFixtures.write(new File(dir, s"part$k.avro"), AvroFixtures.UserData, codec,
+            rows.slice(k * 1000, (k + 1) * 1000).iterator, syncInterval = 1024)
+        val (whole, wholeSpans) = readWithSpans(avro(dir.getPath))
+        assert(wholeSpans == Map("part0.avro" -> 1L, "part1.avro" -> 1L), codec)
+        assert(whole.size == 2000, codec)
+        val (split, splitSpans) = withConf(
+          "spark.sql.files.maxPartitionBytes" -> "8192",
+          "spark.sql.files.openCostInBytes" -> "1024") {
+          readWithSpans(avro(dir.getPath))
+        }
+        assert(splitSpans.keySet == Set("part0.avro", "part1.avro") &&
+          splitSpans.values.forall(_ > 1), s"$codec: $splitSpans")
+        def multiset(rs: Seq[Row]) = rs.groupBy(identity).view.mapValues(_.size).toMap
+        assert(multiset(split) == multiset(whole), codec)
+      } finally FileUtils.deleteQuietly(dir)
+    }
+  }
+
+  private def recordSchema(fields: String): Schema =
+    new Schema.Parser().parse(s"""{"type": "record", "name": "r", "fields": [$fields]}""")
+
+  test("mixed-schema directory: a column that changes type fails naming file, column and types") {
+    val dir = Files.createTempDirectory("avro-mixed-type").toFile
+    try {
+      val longs = recordSchema("""{"name": "id", "type": "long"}, {"name": "v", "type": "long"}""")
+      val strings = recordSchema("""{"name": "id", "type": "long"}, {"name": "v", "type": "string"}""")
+      AvroFixtures.write(new File(dir, "a.avro"), longs, "null",
+        Iterator(AvroFixtures.record(longs, "id" -> 1L, "v" -> 10L)))
+      AvroFixtures.write(new File(dir, "b.avro"), strings, "null",
+        Iterator(AvroFixtures.record(strings, "id" -> 2L, "v" -> "ten")))
+      val df = avro(dir.getPath)
+      // the table's schema comes from one file; the other one cannot be read
+      val (offender, fileType, tableType) = df.schema("v").dataType match {
+        case LongType => ("b.avro", "string", "bigint")
+        case _ => ("a.avro", "bigint", "string")
+      }
+      val e = intercept[Exception](df.collect())
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+      assert(msg.contains(offender) && msg.contains("column `v`") &&
+        msg.contains(s"type $fileType in the file") && msg.contains(s"table's type $tableType"),
+        msg)
+    } finally FileUtils.deleteQuietly(dir)
+  }
+
+  test("mixed-schema directory: a nested record that gained a field decodes by name") {
+    val dir = Files.createTempDirectory("avro-mixed-nested").toFile
+    try {
+      val before = recordSchema("""{"name": "id", "type": "long"}, {"name": "sub", "type":
+        |{"type": "record", "name": "s", "fields": [{"name": "x", "type": "long"}]}}""".stripMargin)
+      // the new field comes first, so positions differ between the files
+      val after = recordSchema("""{"name": "id", "type": "long"}, {"name": "sub", "type":
+        |{"type": "record", "name": "s", "fields": [{"name": "y", "type": "string"},
+        |{"name": "x", "type": "long"}]}}""".stripMargin)
+      AvroFixtures.write(new File(dir, "a.avro"), before, "null", Iterator(AvroFixtures.record(
+        before, "id" -> 1L, "sub" -> AvroFixtures.record(before.getField("sub").schema(), "x" -> 10L))))
+      AvroFixtures.write(new File(dir, "b.avro"), after, "null", Iterator(AvroFixtures.record(
+        after, "id" -> 2L,
+        "sub" -> AvroFixtures.record(after.getField("sub").schema(), "y" -> "new", "x" -> 20L))))
+      def read(schema: String) =
+        spark.read.format("avro").schema(schema).load(dir.getPath).orderBy("id")
+      // the missing leaf is null
+      assert(read("id BIGINT, sub STRUCT<x: BIGINT, y: STRING>")
+        .select("id", "sub.x", "sub.y").collect().toSeq ==
+        Seq(Row(1L, 10L, null), Row(2L, 20L, "new")))
+      // the extra leaf is skipped
+      assert(read("id BIGINT, sub STRUCT<x: BIGINT>").select("id", "sub.x").collect().toSeq ==
+        Seq(Row(1L, 10L), Row(2L, 20L)))
+    } finally FileUtils.deleteQuietly(dir)
   }
 }
